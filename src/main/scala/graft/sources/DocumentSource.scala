@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,9 +12,10 @@ import org.apache.spark.sql.types._
   * per-extension dispatch map and a fast/deep parsing mode
   * (reference: src/server/app/embed/document.py:133-222, dispatch :184-189;
   * load driver :254-320). On Spark the idiomatic equivalent is
-  * `spark.read.format("binaryFile")` (distributed listing + reading via the
-  * Hadoop FS layer — the same layer that reads object storage at cluster
-  * scale) plus an extension-dispatched parse function per row.
+  * `spark.read.format("binaryFile")` (listing on the driver, distributed
+  * reading, both via the Hadoop FS layer — the same layer that reads object
+  * storage at cluster scale) plus an extension-dispatched parse function
+  * per row.
   *
   * Text-native formats parse directly; the binary formats (pdf/docx/pptx/
   * xlsx) extract for REAL via the JDK-only [[BinaryText]] parsers (zip+XML
@@ -50,22 +52,38 @@ object DocumentSource {
     * (reference S10, oci/bucket.py:121-124). */
   def flattenName(key: String): String = key.replaceAll("/", "_")
 
-  /** Distributed listing of a corpus directory: (name, size, time_modified,
-    * etag) — the change-detection input shape. The etag is a deterministic
-    * content-stat digest (path+size+mtime), standing in for the object
-    * store's etag (reference oci/bucket.py:89-118). */
+  /** The files directly under `dir` whose names match `glob`, as a
+    * `binaryFile` relation. The driver lists `dir` once; the content is read
+    * by the tasks of whatever action runs on it. (A glob path `dir/glob`
+    * would instead expand to one root per file, which past
+    * `parallelPartitionDiscovery.threshold` files starts a listing job with
+    * a task per file.) Hidden (`_x`, `.x`) and empty files are skipped, as
+    * everywhere in Spark's file sources; a directory with no matching file
+    * yields no rows, a missing `dir` fails with PATH_NOT_FOUND naming it. */
+  def binaryFiles(spark: SparkSession, dir: String, glob: String): DataFrame =
+    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
+
+  /** Listing of a corpus directory: (name, size, time_modified, etag) — the
+    * change-detection input shape. The etag is a deterministic content-stat
+    * digest (path+size+mtime), standing in for the object store's etag
+    * (reference oci/bucket.py:89-118). The rows come from the file index of
+    * [[binaryFiles]] as a local relation, so the listing runs no Spark job
+    * and names exactly the files [[loadCorpus]] reads, with the `path`,
+    * `size` and `time_modified` it returns. */
   def listFiles(spark: SparkSession, dir: String, glob: String = "*"): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/$glob")
-      .select(col("path"), col("length"), col("modificationTime"))
-      .as[(String, Long, java.sql.Timestamp)]
-      .map { case (p, len, mt) =>
-        val name = flattenName(p.replaceFirst("^file:", "").split('/').takeRight(2).mkString("/"))
-        val etag = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$p:$len:${mt.getTime}".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        (name, len, mt.getTime.toString, etag)
-      }.toDF("name", "size", "time_modified", "etag")
+    val index = binaryFiles(spark, dir, glob).queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.get
+    index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+      val p = f.getPath.toString
+      val (len, mt) = (f.getLen, f.getModificationTime)
+      val name = flattenName(p.replaceFirst("^file:", "").split('/').takeRight(2).mkString("/"))
+      val etag = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$p:$len:$mt".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      (name, len, mt.toString, etag)
+    }.toDF("name", "size", "time_modified", "etag")
   }
 
   /** Load + parse a corpus: one row per file with (path, filename, ext,
@@ -77,7 +95,7 @@ object DocumentSource {
     * markdown — the Docling-export shape, minus OCR). */
   def loadCorpus(spark: SparkSession, dir: String, glob: String = "*",
                  deep: Boolean = false): DataFrame = {
-    val raw = spark.read.format("binaryFile").load(s"$dir/$glob")
+    val raw = binaryFiles(spark, dir, glob)
       .select(col("path"), col("length").as("size"),
         col("modificationTime").as("time_modified"), col("content"))
     val schema = StructType(Seq(

@@ -74,8 +74,7 @@ object ZipIngest {
     * yields a single error row (no partial entries). */
   def explodeArchives(spark: SparkSession, dir: String, glob: String = "*.zip"):
       DataFrame = {
-    val raw = spark.read.format("binaryFile").load(s"$dir/$glob")
-      .select("path", "content")
+    val raw = DocumentSource.binaryFiles(spark, dir, glob).select("path", "content")
     val schema = StructType(Seq(
       StructField("archive_path", StringType),
       StructField("entry_name", StringType),

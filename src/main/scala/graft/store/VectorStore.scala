@@ -2,7 +2,11 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Parquet-backed vector store with a JSON catalog.
   *
@@ -52,18 +56,28 @@ object VectorStore {
 
   private def catalogPath(root: String) = Paths.get(root, "_catalog.json")
 
-  private def updateCatalog(root: String, name: String, configJson: String): Unit = {
+  private val json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** The catalog under `root` (empty if there is none yet); a catalog that
+    * is not one JSON object fails naming its file rather than losing the
+    * other stores' entries on the next write. */
+  private def readCatalog(root: String): ObjectNode = {
     val cat = catalogPath(root)
-    val existing = if (Files.exists(cat)) Files.readString(cat) else "{}"
-    // minimal JSON object merge on top-level key
-    val stripped = existing.trim.stripPrefix("{").stripSuffix("}").trim
-    val others = stripped.split(",(?=\\s*\")").filter(e =>
-      e.trim.nonEmpty && !e.trim.startsWith("\"" + name + "\""))
-    val entry = "\"" + name + "\": " + configJson
-    val merged = (others :+ entry).mkString("{", ",", "}")
+    if (!Files.exists(cat)) json.createObjectNode()
+    else try json.readValue(cat.toFile, classOf[ObjectNode]) catch {
+      case e: JsonProcessingException =>
+        throw new IllegalStateException(s"store catalog $cat is not one JSON object", e)
+    }
+  }
+
+  /** Set the catalog entry `name` to the parsed `configJson`, replacing any
+    * earlier entry of that name; the file is swapped in by atomic rename. */
+  private def updateCatalog(root: String, name: String, configJson: String): Unit = {
+    val merged = readCatalog(root)
+    merged.set[ObjectNode](name, json.readTree(configJson))
     val tmp = Paths.get(root, "_catalog.json.tmp")
-    Files.writeString(tmp, merged)
-    Files.move(tmp, cat, StandardCopyOption.ATOMIC_MOVE,
+    Files.writeString(tmp, json.writeValueAsString(merged))
+    Files.move(tmp, catalogPath(root), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
@@ -105,12 +119,8 @@ object VectorStore {
       .filter(element_at(col("metadata"), "filename") === filename)
 
   /** List catalogued store names (discovery — registry.py:29-77). */
-  def listStores(root: String): Seq[String] = {
-    val cat = catalogPath(root)
-    if (!Files.exists(cat)) Seq.empty
-    else "\"([A-Z0-9_]+)\"\\s*:".r.findAllMatchIn(Files.readString(cat))
-      .map(_.group(1)).toSeq
-  }
+  def listStores(root: String): Seq[String] =
+    readCatalog(root).fieldNames().asScala.toSeq
 
   /** Insert-if-absent merge: rows of `incoming` whose `id` is not already in
     * the store are appended (reference J1 anti-join merge,
@@ -199,16 +209,20 @@ object VectorStore {
     * JSON_VALUE(metadata,'$.filename') = :fname). Plain Parquet has no
     * row-level delete, so this is a filtered rewrite through a staging dir
     * with atomic swap — the analog of the reference's `_TMP` + `PURGE`
-    * protocol. Partitioning the store by filename bucket bounds the rewrite
-    * at scale. */
+    * protocol. A store written with [[writePartitioned]] is rewritten with
+    * its `file_bucket` partitions, so later bucket-pruned reads and
+    * [[upsertPartitioned]] still see one layout. */
   def deleteStale(spark: SparkSession, root: String, name: String,
                   filenames: Seq[String]): Unit = {
     val path = s"$root/$name"
     val staging = s"$root/_staging_$name"
-    spark.read.parquet(path)
+    val store = spark.read.parquet(path)
+    val kept = store
       .filter(!element_at(col("metadata"), "filename").isin(filenames: _*) ||
               element_at(col("metadata"), "filename").isNull)
-      .write.mode(SaveMode.Overwrite).parquet(staging)
+      .write.mode(SaveMode.Overwrite)
+    if (store.columns.contains("file_bucket")) kept.partitionBy("file_bucket").parquet(staging)
+    else kept.parquet(staging)
     val dir = Paths.get(path)
     val tmpOld = Paths.get(s"$root/_old_$name")
     Files.move(dir, tmpOld, StandardCopyOption.ATOMIC_MOVE)

@@ -127,6 +127,34 @@ class SourcesSpec extends SparkSpec {
     assert(deepText == "| region | total |\n| --- | --- |\n| 7 | 950 |")
   }
 
+  /** Spark jobs `body` submits: a listener records job starts until a marker
+    * job, run after `body`, reaches it (the bus delivers events in order). */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "sources-spec-marker"
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      var jobs = 0
+      var d = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (d != marker) {
+        assert(d != null, "marker job never reached the listener")
+        jobs += 1
+        d = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      jobs
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("file listing feeds change detection (S10 shape)") {
     val dir = Files.createTempDirectory("graft-list").toString
     Files.writeString(Paths.get(dir, "x.txt"), "xx")
@@ -135,6 +163,51 @@ class SourcesSpec extends SparkSpec {
     assert(row.getAs[String]("name").endsWith("x.txt"))
     assert(row.getAs[Long]("size") == 2L)
     assert(row.getAs[String]("etag").length == 32)
+
+    // 41 visible files, past parallelPartitionDiscovery.threshold (32) where
+    // a glob root per file starts a listing job, and two hidden ones
+    (0 until 38).foreach(i => Files.writeString(Paths.get(dir, f"d$i%02d.txt"), "t" * (i + 1)))
+    Files.writeString(Paths.get(dir, "a.txt"), "alpha")
+    Files.writeString(Paths.get(dir, "b.md"), "# beta")
+    Files.writeString(Paths.get(dir, "_x.txt"), "hidden")
+    Files.writeString(Paths.get(dir, ".x.txt"), "hidden")
+    assert(jobsIn(DocumentSource.listFiles(spark, dir).collect()) == 0)
+    assert(jobsIn(DocumentSource.loadCorpus(spark, dir)) == 0)
+
+    // names and etags are byte-identical to those derived from loadCorpus's
+    // (path, size, time_modified) — the store's chunk metadata holds the
+    // latter, so any drift would mark every file modified
+    def derived(glob: String): Set[(String, String)] =
+      DocumentSource.loadCorpus(spark, dir, glob)
+        .select("path", "size", "time_modified").collect().map { r =>
+          val (p, len, mt) = (r.getString(0), r.getLong(1), r.getTimestamp(2).getTime)
+          val etag = java.security.MessageDigest.getInstance("MD5")
+            .digest(s"$p:$len:$mt".getBytes("UTF-8")).map("%02x".format(_)).mkString
+          (DocumentSource.flattenName(p.stripPrefix("file:").split('/').takeRight(2)
+            .mkString("/")), etag)
+        }.toSet
+    def listed(glob: String): Set[(String, String)] =
+      DocumentSource.listFiles(spark, dir, glob).select("name", "etag")
+        .as[(String, String)].collect().toSet
+    val visible = Seq("x.txt", "a.txt", "b.md") ++ (0 until 38).map(i => f"d$i%02d.txt")
+    val base = Paths.get(dir).getFileName.toString + "_"
+    for ((glob, names) <- Seq("*" -> visible, "*.txt" -> visible.filter(_.endsWith(".txt")),
+                              "{a.txt,b.md}" -> Seq("a.txt", "b.md"))) {
+      val l = listed(glob)
+      assert(l.map(_._1) == names.map(base + _).toSet, glob)
+      assert(l == derived(glob), glob)
+    }
+
+    // an existing directory with no matching file lists empty; a missing one
+    // fails naming it (an empty listing would make refresh delete the store)
+    assert(DocumentSource.listFiles(spark, dir, "*.pdf").collect().isEmpty)
+    assert(DocumentSource.loadCorpus(spark, dir, "*.pdf").count() == 0L)
+    val missing = Paths.get(dir, "no-such-corpus").toString
+    Seq(() => DocumentSource.listFiles(spark, missing),
+        () => DocumentSource.loadCorpus(spark, missing)).foreach { f =>
+      val e = intercept[Exception](f())
+      assert(e.getMessage.contains(missing), e.getMessage)
+    }
   }
 
   test("flattenName: a/b.txt → a_b.txt (oci/bucket.py:121-124)") {

@@ -109,12 +109,45 @@ class StoreAndRefreshSpec extends SparkSpec {
     assert(left.toSeq == Seq("b_0"))
   }
 
+  test("stale delete keeps a partitioned store's file_bucket layout for later upserts") {
+    // 2,000 rows over 50 files in 16 buckets; delete two files, upsert one
+    // back: every surviving row stays readable through one plain read
+    val root = freshRoot()
+    val rows = (0 until 2000).map(i => chunkRow(s"f${i % 50}_${i / 50}", s"text $i", s"f${i % 50}"))
+    VectorStore.writePartitioned(rows.toDF("id", "text", "metadata", "embedding"), root, "D1",
+      """{"alias": "d1"}""", numBuckets = 16)
+    VectorStore.deleteStale(spark, root, "D1", Seq("f3", "f7"))
+    assert(VectorStore.read(spark, root, "D1").count() == 1920L)
+    val back = rows.filter(_._3("filename") == "f3").toDF("id", "text", "metadata", "embedding")
+    assert(VectorStore.upsertPartitioned(spark, root, "D1", back, numBuckets = 16) == ((0L, 40L)))
+    val after = VectorStore.read(spark, root, "D1")
+    assert(after.count() == 1960L)
+    assert(after.filter(col("metadata")("filename") === "f7").count() == 0L)
+    assert(VectorStore.readForFilename(spark, root, "D1", "f3", numBuckets = 16).count() == 40L)
+  }
+
   test("catalog lists stores after write") {
     val root = freshRoot()
     val df = Seq(chunkRow("x", "x", "x")).toDF("id", "text", "metadata", "embedding")
-    VectorStore.write(df, root, "S_ONE", """{"alias": "one"}""")
+    // a nested config (the reference's embedding_model shape), written twice
+    val config = """{"alias": "one", "embedding_model": {"provider": "stub", "id": "h"},""" +
+      """ "chunk_size": 200}"""
+    VectorStore.write(df, root, "S_ONE", config)
+    VectorStore.write(df, root, "S_ONE", config)
     VectorStore.write(df, root, "S_TWO", """{"alias": "two"}""")
+    // the whole file is one JSON object (no trailing text) with two keys
+    val cat = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+      .readTree(java.nio.file.Paths.get(root, "_catalog.json").toFile)
+    import scala.jdk.CollectionConverters._
+    assert(cat.fieldNames().asScala.toSet == Set("S_ONE", "S_TWO"))
+    assert(cat.get("S_ONE").get("embedding_model").get("id").asText() == "h")
     assert(VectorStore.listStores(root).toSet == Set("S_ONE", "S_TWO"))
+    // a catalog with text after its object fails naming the file
+    val bad = java.nio.file.Paths.get(freshRoot(), "_catalog.json")
+    Files.writeString(bad, """{"chunk_size": 200},"S_ONE": {}}""")
+    val e = intercept[IllegalStateException](VectorStore.listStores(bad.getParent.toString))
+    assert(e.getMessage.contains(bad.toString))
   }
 
   test("processedFiles rolls chunks up to one row per file (reference A1)") {
