@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Emits a compact schema-stable JSON summary line to
   * stdout after EVERY pass (cold, steady1, final) — the downstream
@@ -37,30 +36,10 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - wallT0) / 1e9
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "2400").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // local A/B hook: extra confs as "k=v;k=v" (unset in driver runs —
-    // the driver's bench numbers always come from the defaults above).
-    // Malformed segments are skipped, and every APPLIED conf is echoed to
-    // stdout so a recorded bench output self-documents its config (a
-    // leaked env var can't silently skew recorded numbers).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty =>
-          println(s"bench: EXTRA_CONF applied ${k.trim}=${v.trim}")
-          builder.config(k.trim, v.trim)
-        case _ if kv.trim.isEmpty => // tolerate empty segments / trailing ';'
-        case _ => System.err.println(s"bench: EXTRA_CONF segment skipped (no '='): '$kv'")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // JVM/codegen warmup so classloading isn't attributed to the first
-    // query; queries then run in sorted order for stable per-round deltas
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val cpus = SessionConf.cpus
+    val spark = SessionConf.localSession()
+    // parquet-reader warm-up; queries then run in sorted order for stable
+    // per-round deltas
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
     // optional args: restrict to the named queries (local timing aid;
     // the driver always runs argless → full suite)
@@ -246,13 +225,6 @@ object Bench {
         n -> math.min(t, steady2.getOrElse(n, t)) }
     } else System.err.println(f"bench: over budget " +
       f"(${elapsedS}%.0f s > ${budgetS}%.0f s) — skipping steady pass 2")
-
-    // local tuning aid: per-query steady times to stderr (the driver only
-    // parses the stdout JSON tail, which must stay compact)
-    if (sys.env.contains("SPARK_GRAFT_STEADY_DETAIL"))
-      steady.sortBy(-_._2).foreach { case (n, t) =>
-        System.err.println(f"steady $n%-28s $t%8.3f s")
-      }
 
     // leak audit BEFORE the final line so its verdict rides in it:
     // after clearCache + GC (ContextCleaner drains localCheckpoint

@@ -39,6 +39,44 @@ object SessionConf {
 
   private val ShuffleKey = "spark.sql.shuffle.partitions"
 
+  /** Core count of the mains' local master: `SPARK_GRAFT_CPUS`, default 32. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The one session of the mains (Bench, Verify, Probe, ScaleProbe,
+    * MergeProbe): `local[cpus]` with as many shuffle partitions, no UI, UTC
+    * session time, then the `SPARK_GRAFT_EXTRA_CONF` overrides ("k=v;k=v",
+    * a local A/B hook, unset for recorded benchmark runs). Every applied
+    * override is echoed to stdout, so a recorded output documents its
+    * config. Ends with a small warm-up job, so JVM class loading and
+    * codegen start-up are not charged to the first query. */
+  def localSession(): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config(ShuffleKey, cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(parseConf(_).foreach { case (k, v) =>
+      println(s"session: EXTRA_CONF applied $k=$v")
+      builder.config(k, v)
+    })
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(100000).selectExpr("sum(id)").collect()
+    spark
+  }
+
+  /** Parses "k=v;k=v" into trimmed pairs. Empty segments (a trailing ';')
+    * are skipped; any other segment without a key and '=' throws, naming
+    * the segment — a mistyped override must not run silently unapplied. */
+  def parseConf(s: String): Seq[(String, String)] =
+    s.split(';').toSeq.filter(_.trim.nonEmpty).map { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF: segment '$seg' is not k=v")
+      }
+    }
+
   /** session (identity) -> thread currently holding an override, if any.
     * SparkSession does not override equals, so keys compare by identity;
     * entries are removed on exit, so nothing pins a session. */

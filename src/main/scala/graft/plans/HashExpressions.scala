@@ -34,7 +34,7 @@ object HashExpressions {
   private val SEED = 42L
   /** 2^31-1 — the shared modulus of every polynomial/affine hash here. */
   val P2n31: Long = 2147483647L
-  private val P = P2n31 // matches Dedup.minhashFromHashes
+  private val P = P2n31 // matches DedupTwins.minhashFromHashes (test scope)
   /** Rolling-polynomial bases (Rabin-Karp). Kept SQL-expressible on purpose:
     * the DuckDB correctness oracle recomputes the identical hash with
     * `list_reduce` over character codes, which xxhash64 cannot do. */
@@ -72,8 +72,8 @@ object HashExpressions {
   }
 
   /** The seeded permutation coefficients (a_i, b_i) shared by the native
-    * MinHashSigExpr, the declarative Dedup.minhashFromHashes, and the
-    * generated DuckDB oracle SQL — single source of truth. */
+    * MinHashSigExpr, the declarative DedupTwins.minhashFromHashes (test
+    * scope), and the generated DuckDB oracle SQL — single source of truth. */
   def minhashCoeffs(numHashes: Int): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(42)
     val pairs = Array.fill(numHashes)((math.abs(rnd.nextInt()).toLong % (P - 1) + 1,
@@ -421,32 +421,48 @@ object HashExpressions {
     * `bands` equal slices and each slice folds with the same polynomial
     * the SQL form used — acc·1000003 + v mod 2³¹−1 — so the band keys
     * are bit-identical to
-    * `aggregate(slice(sig, b·rows+1, rows), 0L, (acc, v) -> …)`. */
+    * `aggregate(slice(sig, b·rows+1, rows), 0L, (acc, v) -> …)`. As in
+    * that fold, a null element nulls its own band's hash only. */
   def bandHashesEval(sig: ArrayData, bands: Int): ArrayData = {
     val n = sig.numElements()
     val rows = n / bands
     val out = new Array[Long](bands)
+    var nullBands: Array[Boolean] = null
     var b = 0
     while (b < bands) {
       var acc = 0L
       var i = b * rows
       val end = i + rows
-      while (i < end) { acc = (acc * 1000003L + sig.getLong(i)) % 2147483647L; i += 1 }
+      while (i < end) {
+        if (sig.isNullAt(i)) {
+          if (nullBands == null) nullBands = new Array[Boolean](bands)
+          nullBands(b) = true
+          i = end
+        } else {
+          acc = (acc * 1000003L + sig.getLong(i)) % 2147483647L
+          i += 1
+        }
+      }
       out(b) = acc
       b += 1
     }
-    new GenericArrayData(out)
+    if (nullBands == null) new GenericArrayData(out)
+    else new GenericArrayData(Array.tabulate[Any](bands)(b => if (nullBands(b)) null else out(b)))
   }
 
   /** Positions where two equal-length ARRAY<BIGINT> signatures agree —
     * native twin of `size(filter(zip_with(a, b, (p, q) -> p = q), v -> v))`
     * (unequal lengths: the zip_with tail compares against null, which the
-    * filter drops — identical to stopping at the shorter length). */
+    * filter drops — identical to stopping at the shorter length). A null
+    * element compares as null there too, so it counts as a disagreement. */
   def sigAgreeEval(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
     var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) c += 1; i += 1 }
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
+      i += 1
+    }
     c
   }
 
@@ -459,12 +475,14 @@ object HashExpressions {
     * adjusts to DECIMAL(38,17) — so every intermediate sum rounds
     * HALF_UP to 17 fraction digits before the lambda's CAST back to
     * (38,18). Bit-identical to the `aggregate(zip_with(...))` fold it
-    * replaces (spec-pinned, including that per-step rounding). */
+    * replaces (spec-pinned, including that per-step rounding). A null
+    * element nulls the whole fold, as in the SQL form: returns null. */
   def ewmaWsumEval(hist: ArrayData): Decimal = {
     val L = hist.numElements()
     var acc = java.math.BigDecimal.ZERO
     var i = 1
     while (i <= L) {
+      if (hist.isNullAt(i - 1)) return null
       val term = java.math.BigDecimal
         .valueOf(hist.getDouble(i - 1) / (1L << (L - i + 1)).toDouble)
         .setScale(18, java.math.RoundingMode.HALF_UP)
@@ -478,10 +496,17 @@ object HashExpressions {
 
   private val helper = "graft.plans.HashExpressions"
 
+  /** Whether `e` is an array type whose elements may be null. */
+  private def elementsNullable(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+
   /** Distinct XXH64 hashes of the n-byte windows of a string (the whole
-    * string if shorter than n) — native twin of Dedup.shingleHashes,
-    * already reduced mod 2^31-1. Codegen emits a direct static call, so the
-    * surrounding projection stays in one whole-stage-codegen span. */
+    * string if shorter than n) — native twin of DedupTwins.shingleHashes
+    * (test scope), already reduced mod 2^31-1. Codegen emits a direct
+    * static call, so the surrounding projection stays in one
+    * whole-stage-codegen span. */
   case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
     override def prettyName: String = "graft_shingle_hashes"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -627,8 +652,9 @@ object HashExpressions {
   }
 
   /** MinHash signature from pre-reduced hashes: same seeded (a_i, b_i)
-    * permutations as Dedup.minhashFromHashes, all minima in one pass. The
-    * coefficient arrays ride into generated code as reference objects. */
+    * permutations as DedupTwins.minhashFromHashes (test scope), all minima
+    * in one pass. The coefficient arrays ride into generated code as
+    * reference objects. */
   case class MinHashSigExpr(child: Expression, numHashes: Int) extends UnaryExpression {
     override def prettyName: String = "graft_minhash_sig"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -668,6 +694,7 @@ object HashExpressions {
   case class EwmaWsumExpr(child: Expression) extends UnaryExpression {
     override def prettyName: String = "graft_ewma_wsum"
     override def dataType: DataType = DecimalType(38, 18)
+    override def nullable: Boolean = child.nullable || elementsNullable(child)
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<DOUBLE>, got ${t.simpleString}")
@@ -675,7 +702,8 @@ object HashExpressions {
     override protected def nullSafeEval(input: Any): Any =
       ewmaWsumEval(input.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.ewmaWsumEval($c);")
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.ewmaWsumEval($c);" +
+        (if (nullable) s" ${ev.isNull} = ${ev.value} == null;" else ""))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -683,7 +711,7 @@ object HashExpressions {
   case class BandHashesExpr(child: Expression, bands: Int) extends UnaryExpression {
     require(bands >= 1, "graft_band_hashes: need bands >= 1")
     override def prettyName: String = "graft_band_hashes"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def dataType: DataType = ArrayType(LongType, elementsNullable(child))
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<BIGINT>, got ${t.simpleString}")

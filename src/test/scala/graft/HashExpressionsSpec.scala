@@ -19,7 +19,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native polynomial shingle hashes equal the declarative form on ASCII input") {
     val rows = df.select(
       array_sort(call_function("graft_shingle_polyhashes", col("text"), lit(5))).as("native"),
-      array_sort(Dedup.shingleHashes("text", 5)).as("hof")).collect()
+      array_sort(DedupTwins.shingleHashes("text", 5)).as("hof")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
@@ -65,7 +65,7 @@ class HashExpressionsSpec extends SparkSpec {
     val rows = df.select(
       call_function("graft_minhash_sig",
         call_function("graft_shingle_polyhashes", col("text"), lit(5)), lit(64)).as("native"),
-      Dedup.minhashSignature("text", 5, 64).as("hof")).collect()
+      DedupTwins.minhashSignature("text", 5, 64).as("hof")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
@@ -88,7 +88,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("short text (< n) hashes the whole string, like the declarative branch") {
     val rows = Seq("ab").toDF("text").select(
       call_function("graft_shingle_polyhashes", col("text"), lit(5)).as("native"),
-      Dedup.shingleHashes("text", 5).as("hof")).head()
+      DedupTwins.shingleHashes("text", 5).as("hof")).head()
     assert(rows.getSeq[Long](0) == rows.getSeq[Long](1))
     assert(rows.getSeq[Long](0).length == 1)
   }
@@ -131,17 +131,23 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("graft_band_hashes equals the transform(sequence)/aggregate(slice) band fold") {
+    // plus one signature whose element 10 is null: only its band's hash is null
+    val nullSig = spark.range(1).select(array((0 until 64).map(i =>
+      if (i == 10) lit(null).cast("long") else col("id") + i * 7919L): _*).as("_sig"))
     for (bands <- Seq(8, 16)) {
       val rows = bands match { case b => 64 / b }
       val hof = expr(s"transform(sequence(0, ${bands - 1}), b -> " +
         s"aggregate(slice(_sig, b * $rows + 1, $rows), 0L, " +
         s"(acc, v) -> (acc * 1000003L + v) % 2147483647L))")
       val got = df
-        .withColumn("_sig", call_function("graft_minhash_sig",
-          call_function("graft_shingle_polyhashes", col("text"), lit(5)), lit(64)))
+        .select(call_function("graft_minhash_sig",
+          call_function("graft_shingle_polyhashes", col("text"), lit(5)), lit(64)).as("_sig"))
+        .union(nullSig)
         .select(call_function("graft_band_hashes", col("_sig"), lit(bands)).as("native"),
           hof.as("hof")).collect()
       got.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"bands=$bands"))
+      val nullBands = got.map(_.getSeq[Any](1).zipWithIndex.filter(_._1 == null).map(_._2))
+      assert(nullBands.filter(_.nonEmpty).toSeq == Seq(Seq(10 / rows)), s"bands=$bands")
     }
   }
 
@@ -153,7 +159,11 @@ class HashExpressionsSpec extends SparkSpec {
           call_function("graft_shingle_polyhashes", col("a.text"), lit(5)), lit(64)).as("sa"),
         call_function("graft_minhash_sig",
           call_function("graft_shingle_polyhashes", col("b.text"), lit(5)), lit(64)).as("sb"))
-    val got = pairs.select(
+    // plus one pair with a null at the same position: a disagreement
+    val nullPair = spark.range(1).select(
+      array(col("id") + 1, lit(null).cast("long"), col("id") + 3).as("sa"),
+      array(col("id") + 1, lit(null).cast("long"), col("id") + 5).as("sb"))
+    val got = pairs.union(nullPair).select(
       call_function("graft_sig_agree", col("sa"), col("sb")).as("native"),
       expr("size(filter(zip_with(sa, sb, (p, q) -> p = q), v -> v))").as("hof")).collect()
     assert(got.nonEmpty)
@@ -173,7 +183,10 @@ class HashExpressionsSpec extends SparkSpec {
       Tuple1((1 to (1 + rnd.nextInt(16))).map(_ =>
         (rnd.nextDouble() - 0.5) * 2000.0).toArray)
     }
-    val adf = arrs.toDF("_hist").withColumn("_L", size(col("_hist")))
+    // plus one history with a null element: the whole fold is null
+    val nullHist = spark.range(1).select(
+      array(col("id") + 1.5, lit(null).cast("double"), col("id") - 2.0).as("_hist"))
+    val adf = arrs.toDF("_hist").union(nullHist).withColumn("_L", size(col("_hist")))
     val rows = adf.select(
       call_function("graft_ewma_wsum", col("_hist")).as("native"),
       expr(
@@ -184,6 +197,7 @@ class HashExpressionsSpec extends SparkSpec {
           |  CAST(0 AS DECIMAL(38,18)),
           |  (a, x) -> CAST(a + x AS DECIMAL(38,18)))""".stripMargin).as("hof")).collect()
     rows.foreach(r => assert(r.getDecimal(0) == r.getDecimal(1)))
+    assert(rows.count(_.isNullAt(1)) == 1)
   }
 
   test("xxhash64-based shingle/token exprs stay available and consistent") {
